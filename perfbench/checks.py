@@ -1,7 +1,9 @@
 """Independent correctness checks: DuckDB computations over the same
 inputs, compared with what graft served, stored or returned."""
+import calendar
 import glob
 import json
+import time
 
 import duckdb
 
@@ -105,7 +107,7 @@ def expected_response(con, req):
     if len(parts) == 4 and parts[3] == "recent":
         rows = con.execute(
             f"SELECT {cols} FROM exp WHERE symbol = ? AND timeframe = ? "
-            f"ORDER BY window_start DESC LIMIT ?", [sym, tf, int(p["n"])]).fetchall()
+            f"ORDER BY window_start DESC LIMIT ?", [sym, tf, int(p.get("n", 25))]).fetchall()
         return "sorted", sorted(_row(dict(zip(CANDLE_COLS, r)), CANDLE_COLS) for r in rows)
     rng = (f"FROM exp WHERE symbol = '{sym}' AND timeframe = '{tf}' "
            f"AND window_start >= TIMESTAMP '{p['from']}' AND window_start < TIMESTAMP '{p['to']}'")
@@ -152,13 +154,17 @@ def check_response(expected, status, body):
 
 def check_store(store_dir, txns_dir, n_ticks, n_symbols=5):
     """Compare a cascade store with DuckDB's OHLCV aggregation of the same
-    transactions at all four timeframes. Returns a list of problems."""
+    transactions at all four timeframes. Returns a list of problems,
+    each a dict with the timeframe, the window_start of the candle at
+    fault ('YYYY-MM-DD HH:MM:SS', or None for a per-timeframe total)
+    and a description."""
     con = connect()
     txn = (f"SELECT symbol, price, quantity, ts FROM read_parquet('{txns_dir}/*.parquet')")
     con.execute(f"CREATE TABLE want AS {candles_sql(txn)}")
     files = glob.glob(f"{store_dir}/timeframe=*/symbol=*/**/*.parquet", recursive=True)
     if not files:
-        return ["store holds no files"]
+        return [{"timeframe": tf, "window_start": None, "problem": "store holds no files"}
+                for tf in TFS]
     con.execute(f"""CREATE TABLE got AS SELECT {", ".join(CANDLE_COLS)}
                     FROM read_parquet({files!r}, hive_partitioning = true)""")
     problems = []
@@ -166,10 +172,27 @@ def check_store(store_dir, txns_dir, n_ticks, n_symbols=5):
         n_txn = con.execute("SELECT coalesce(sum(n_txn), 0) FROM got WHERE timeframe = ?",
                             [tf]).fetchone()[0]
         if n_txn != n_symbols * n_ticks:
-            problems.append(f"{tf}: sum(n_txn) = {n_txn}, want {n_symbols * n_ticks}")
+            problems.append({"timeframe": tf, "window_start": None,
+                             "problem": f"sum(n_txn) = {n_txn}, want {n_symbols * n_ticks}"})
+    cols = ", ".join(CANDLE_COLS)
     for a, b in (("got", "want"), ("want", "got")):
-        n = con.execute(f"""SELECT count(*) FROM (SELECT {", ".join(CANDLE_COLS)} FROM {a}
-                            EXCEPT ALL SELECT {", ".join(CANDLE_COLS)} FROM {b})""").fetchone()[0]
-        if n:
-            problems.append(f"{n} candle rows in {a} but not in {b}")
+        rows = con.execute(f"""SELECT DISTINCT timeframe, window_start FROM
+                                 (SELECT {cols} FROM {a} EXCEPT ALL SELECT {cols} FROM {b})
+                               ORDER BY 1, 2""").fetchall()
+        problems += [{"timeframe": tf, "window_start": _ts(ws),
+                      "problem": f"candle in {a} but not in {b}"} for tf, ws in rows]
     return problems
+
+
+def trigger_of(problem, start, ticks, n_triggers):
+    """The trigger at fault for a check_store problem, for a stream of
+    `ticks` one-second ticks per trigger from epoch second `start`. A
+    MINUTE or HOUR candle lies in the ticks of exactly one trigger; a
+    DAY or MONTH candle, or a per-timeframe total, was last written by
+    the last trigger."""
+    if start % 3600 or ticks % 3600:
+        raise ValueError("triggers must cover whole hours")
+    if problem["window_start"] is None or problem["timeframe"] not in ("MINUTE", "HOUR"):
+        return n_triggers - 1
+    ws = calendar.timegm(time.strptime(problem["window_start"], "%Y-%m-%d %H:%M:%S"))
+    return (ws - start) // ticks

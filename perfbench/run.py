@@ -9,8 +9,9 @@ The last stdout line is one JSON object with the keys correct,
 attempted, failed and metrics. With --trace 0 the metrics are the
 end-to-end metrics of BENCHMARK.json; with --trace 1 (a separate run
 with Spark listeners registered) the per-layer metrics. Earlier lines
-carry the run's diagnostics: warm-up times, sample counts and
-/proc/loadavg before and after. See perfbench/README.md.
+carry the run's diagnostics: warm-up times, sample counts,
+/proc/loadavg before and after and the run's CPU steal share. See
+perfbench/README.md.
 """
 import argparse
 import http.client
@@ -28,16 +29,16 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 import build  # noqa: E402
 import checks  # noqa: E402
-import inputs  # noqa: E402
 
 # ---- workload settings (see perfbench/README.md) --------------------------
 CLIENTS = 4                 # closed-loop connections in serve's loaded phase
-SERVE_EVENTS = 100_000      # sf0.1 events
+SERVE_EVENTS = 100_000      # sf0.1 events, made by graft.GenData.events
 SERVE_ROUNDS = 12           # distinct request rounds generated from the seed
-SERVE_WARM = 1              # untimed rounds before the one-client phase
+SERVE_WARM = 2              # untimed rounds before the one-client phase
+CHART = 25                  # windows per chart: CandleHttpServer's default `recent` n
 INGEST_TICKS = 3600         # ticks per trigger = 1 h of event time (1 tick/s)
-INGEST_WARM = 3             # triggers discarded as warm-up
-INGEST_MIN_KEPT = 3         # timed triggers, at least
+INGEST_WARM = 4             # triggers discarded as warm-up
+INGEST_S_PER_TRIGGER = 4    # kept triggers = max(3, --seconds // this)
 JVM_HEAP = "2g"
 DEADLINE_S = 170            # a run never outlives this
 JDK17_OPENS = [
@@ -49,9 +50,11 @@ JDK17_OPENS = [
 
 END_TO_END = {"setup_s": "s", "latency_ms": "ms", "throughput_per_s": "1/s"}
 ENGINE_LAYERS = {  # per operation: a request on serve, a kept trigger on ingest
-    "engine.jobs_per_op": "count", "engine.tasks_per_op": "count",
+    "engine.jobs_per_op": "count", "engine.stages_per_op": "count",
+    "engine.tasks_per_op": "count", "engine.executor_run_ms_per_op": "ms",
     "engine.executor_cpu_ms_per_op": "ms", "engine.gc_ms_per_op": "ms",
     "engine.core_busy": "ratio", "engine.codegen_compiles_per_op": "count",
+    "engine.codegen_ms_per_op": "ms", "engine.unattributed_ms_per_op": "ms",
     "engine.shuffle_bytes_per_op": "bytes", "engine.spill_bytes_per_op": "bytes"}
 PER_LAYER = {
     "serving.gateway_ms": "ms", "serving.queue_ms": "ms", "store.open_ms": "ms",
@@ -70,19 +73,36 @@ def loadavg():
         return f.read().split()[:3]
 
 
+def cpu_ticks():
+    """(steal, total) jiffies of all CPUs from /proc/stat: time the
+    hypervisor gave this machine's CPUs to someone else."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:]]
+    return fields[7], sum(fields[:8])
+
+
 def info(event, **fields):
     """A diagnostics line (never the last line of stdout)."""
     print(json.dumps({"event": event, **fields}), flush=True)
 
 
-def engine_layers(counters, ops, wall_s, cpus):
-    """Spark runtime work per operation from listener counter deltas."""
+def engine_layers(counters, ops, wall_s, cpus, construct_ms):
+    """Spark runtime work per operation from counter deltas over `ops`
+    operations that took `wall_s`. Unattributed time is the mean
+    operation's wall time less its DataFrame construction and its
+    executor run time spread over the cores."""
+    run_ms = counters.get("executor_run_ms", 0) / ops
     return {
         "engine.jobs_per_op": counters.get("jobs", 0) / ops,
+        "engine.stages_per_op": counters.get("stages", 0) / ops,
         "engine.tasks_per_op": counters.get("tasks", 0) / ops,
+        "engine.executor_run_ms_per_op": run_ms,
         "engine.executor_cpu_ms_per_op": counters.get("executor_cpu_ms", 0) / ops,
-        "engine.core_busy": counters.get("executor_run_ms", 0) / 1000 / (wall_s * cpus),
+        "engine.gc_ms_per_op": counters.get("gc_ms", 0) / ops,
+        "engine.core_busy": run_ms * ops / 1000 / (wall_s * cpus),
         "engine.codegen_compiles_per_op": counters.get("codegen_compiles", 0) / ops,
+        "engine.codegen_ms_per_op": counters.get("codegen_ms", 0) / ops,
+        "engine.unattributed_ms_per_op": wall_s * 1000 / ops - construct_ms - run_ms / cpus,
         "engine.shuffle_bytes_per_op": counters.get("shuffle_bytes", 0) / ops,
         "engine.spill_bytes_per_op": counters.get("spill_bytes", 0) / ops,
     }
@@ -144,19 +164,22 @@ class Jvm:
 # ---- serve ----------------------------------------------------------------
 
 def serve_requests(con, rng, rounds):
-    """Rounds of 19 requests: a point, recent and keys request at each of
-    the four timeframes, a range and a range + fill request at MINUTE,
-    HOUR and DAY, and symbols. Every round has the same shape, so any
-    number of whole rounds has the same mix; the seed picks symbols,
-    times, `n` and `limit`. Keys and windows come from candles that
-    exist (`exp`)."""
+    """Rounds of 21 requests: each route of CandleHttpServer once at each
+    of the four timeframes (point, range, range + fill, recent, keys)
+    and /symbols once. No record of real chart traffic exists to weight
+    the routes by, so every (route, timeframe) pair the gateway serves
+    gets the same share. Each request asks for one chart's worth:
+    a range spans CHART windows, recent uses the server's default n
+    (= CHART), and keys asks for a page of CHART keys after an existing
+    key. Every round has the same shape, so any number of whole rounds
+    has the same mix; the seed picks the symbols and the existing
+    candles (from `exp`) that anchor point, range and keys requests."""
     rows = con.execute("SELECT symbol, timeframe, window_start FROM exp "
                        "ORDER BY timeframe, symbol, window_start").fetchall()
     by_tf = {}
     for r in rows:
         by_tf.setdefault(r[1], []).append(r)
     symbols = sorted({r[0] for r in rows})
-    span = {"MINUTE": "30 minutes", "HOUR": "12 hours", "DAY": "7 days"}
 
     def pick(xs):
         return xs[int(rng.integers(0, len(xs)))]
@@ -167,17 +190,38 @@ def serve_requests(con, rng, rounds):
         for tf in checks.TFS:
             sym, _, ws = pick(by_tf[tf])
             rnd.append(f"/candles/{sym}/{tf}/point?key={ws.strftime(checks.KEY_FMT[tf])}")
-            rnd.append(f"/candles/{pick(symbols)}/{tf}/recent?n={int(rng.integers(1, 11))}")
-            rnd.append(f"/keys/{pick(symbols)}/{tf}?limit={int(rng.integers(1, 21))}")
-        for tf in span:
             for fill in ("", "&fill=true"):
                 sym, _, ws = pick(by_tf[tf])
-                to = con.execute(f"SELECT strftime(TIMESTAMP '{ws}' + INTERVAL {span[tf]}, "
-                                 "'%Y-%m-%d+%H:%M:%S')").fetchone()[0]
+                to = con.execute(f"SELECT strftime(TIMESTAMP '{ws}' + INTERVAL {CHART} "
+                                 f"{checks.UNIT[tf]}, '%Y-%m-%d+%H:%M:%S')").fetchone()[0]
                 rnd.append(f"/candles/{sym}/{tf}?from={ws:%Y-%m-%d+%H:%M:%S}&to={to}{fill}")
+            rnd.append(f"/candles/{pick(symbols)}/{tf}/recent")
+            sym, _, ws = pick(by_tf[tf])
+            after = f"candle:{sym}:{tf}:{ws.strftime(checks.KEY_FMT[tf])}"
+            rnd.append(f"/keys/{sym}/{tf}?limit={CHART}&after={after}")
         rnd.append("/symbols")
         out.append(rnd)
     return out
+
+
+def route(req):
+    """The route a request takes: point, range, range_fill, recent,
+    keys or symbols."""
+    path, _, query = req.partition("?")
+    parts = path.strip("/").split("/")
+    if parts[0] in ("keys", "symbols"):
+        return parts[0]
+    if len(parts) == 4:
+        return parts[3]
+    return "range_fill" if "fill=true" in query else "range"
+
+
+def route_p50(results):
+    """p50 latency and sample count per route."""
+    by = {}
+    for req, _, _, ms in results:
+        by.setdefault(route(req), []).append(ms)
+    return {r: {"p50_ms": round(median(xs), 1), "samples": len(xs)} for r, xs in sorted(by.items())}
 
 
 def http_phase(port, rounds, start, n_rounds_min, seconds, clients):
@@ -207,12 +251,17 @@ def http_phase(port, rounds, start, n_rounds_min, seconds, clients):
         try:
             while (req := take()) is not None:
                 t = time.perf_counter()
-                conn.request("GET", req)
-                resp = conn.getresponse()
-                body = resp.read()
+                try:
+                    conn.request("GET", req)
+                    resp = conn.getresponse()
+                    status, body = resp.status, resp.read()
+                except (OSError, http.client.HTTPException) as e:
+                    # a request that got no response counts as status 0
+                    status, body = 0, repr(e).encode()
+                    conn.close()
                 ms = (time.perf_counter() - t) * 1000
                 with lock:
-                    results.append((req, resp.status, body, ms))
+                    results.append((req, status, body, ms))
         finally:
             conn.close()
 
@@ -226,18 +275,21 @@ def http_phase(port, rounds, start, n_rounds_min, seconds, clients):
 
 def run_serve(args, cp, work):
     import numpy as np
-    data = inputs.make(args.seed, f"{work}/data", n_events=SERVE_EVENTS)
-    con = checks.connect()
-    checks.expected_store(con, f"{data}/events.parquet")
-    rounds = serve_requests(con, np.random.default_rng(args.seed), SERVE_ROUNDS)
-    req_file = f"{work}/requests.txt"
-    with open(req_file, "w") as f:
-        f.write("\n".join(r for rnd in rounds for r in rnd) + "\n")
     deadline = time.time() + DEADLINE_S
-    jvm = Jvm(cp, "serve", work, {"cpus": args.cpus, "work": work, "data": data,
-                                 "store": f"{work}/store", "trace": args.trace})
+    jvm = Jvm(cp, "serve", work, {"cpus": args.cpus, "work": work, "data": f"{work}/data",
+                                 "events": SERVE_EVENTS, "store": f"{work}/store",
+                                 "trace": args.trace})
     try:
-        port = jvm.next("ready", deadline)["port"]
+        # the expected candles and the request rounds are computed while
+        # the JVM builds the store
+        con = checks.connect()
+        gen = jvm.next("events", deadline)
+        checks.expected_store(con, gen["path"])
+        rounds = serve_requests(con, np.random.default_rng(args.seed), SERVE_ROUNDS)
+        req_file = f"{work}/requests.txt"
+        with open(req_file, "w") as f:
+            f.write("\n".join(r for rnd in rounds for r in rnd) + "\n")
+        ready = jvm.next("ready", deadline)
         ready_s = time.time() - jvm.launched
         marks = {}
 
@@ -247,12 +299,12 @@ def run_serve(args, cp, work):
                 marks[name] = jvm.next("mark", deadline)["counters"]
 
         half = args.seconds / 2
-        warm, _, nxt = http_phase(port, rounds, 0, SERVE_WARM, 0, 1)
+        warm, _, nxt = http_phase(ready["port"], rounds, 0, SERVE_WARM, 0, 1)
         setup_s = time.time() - jvm.launched
         mark("solo0")
-        solo, solo_s, nxt = http_phase(port, rounds, nxt, 1, half, 1)
+        solo, solo_s, nxt = http_phase(ready["port"], rounds, nxt, 1, half, 1)
         mark("solo1")
-        loaded, load_s, nxt = http_phase(port, rounds, nxt, 1, half, CLIENTS)
+        loaded, load_s, nxt = http_phase(ready["port"], rounds, nxt, 1, half, CLIENTS)
         mark("load1")
         direct = None
         if args.trace:
@@ -275,22 +327,26 @@ def run_serve(args, cp, work):
                      body=body[:300].decode("utf-8", "replace"))
         return n
 
+    # failed: timed requests answered wrongly; correct: the untimed
+    # warm-up rounds were answered rightly
     warm_ok = bad(warm) == 0
     failed = bad(solo + loaded)
     solo_ms = [r[3] for r in solo]
     load_ms = [r[3] for r in loaded]
-    info("serve", ready_s=ready_s, warm_ms=[round(r[3], 1) for r in warm],
+    info("serve", ready_s=ready_s, events_gen_ms=gen["gen_ms"],
+         store_build_ms=ready["store_build_ms"], warm_ms=[round(r[3], 1) for r in warm],
          solo_samples=len(solo_ms), loaded_samples=len(load_ms),
          solo_p50_ms=median(solo_ms), loaded_p50_ms=median(load_ms),
          loaded_p90_ms=statistics.quantiles(load_ms, n=10)[-1] if len(load_ms) >= 10 else None,
          solo_ms=[round(x, 1) for x in solo_ms], loaded_ms=[round(x, 1) for x in load_ms],
-         solo_wall_s=solo_s, loaded_wall_s=load_s, completed_per_s=len(load_ms) / load_s,
+         solo_wall_s=solo_s, loaded_wall_s=load_s,
+         solo_by_route=route_p50(solo), loaded_by_route=route_p50(loaded),
          distinct_requests=len(expected),
          peak_rss_mb=done["peak_rss_mb"], live_heap_mb=done["live_heap_mb"])
-    # closed loop without think time: throughput = clients / mean latency
-    # (Little's law), which leaves out the drain at the end of the phase
+    # the gateway answers one request at a time and stays busy while any
+    # client waits, so completed requests ÷ phase wall time is its rate
     e2e = {"setup_s": setup_s, "latency_ms": median(solo_ms),
-           "throughput_per_s": CLIENTS / (statistics.mean(load_ms) / 1000)}
+           "throughput_per_s": len(load_ms) / load_s}
     layers = {}
     if args.trace:
         # Spark work per request in the one-client phase; GC over both phases
@@ -308,7 +364,8 @@ def run_serve(args, cp, work):
             "store.rows_scanned_per_row_returned":
                 sum(d["rows_scanned"] for d in direct)
                 / max(1, sum(d["rows_returned"] for d in direct)),
-            **engine_layers(d_solo, len(solo), solo_s, args.cpus),
+            **engine_layers(d_solo, len(solo), solo_s, args.cpus,
+                            statistics.mean(d["construct_ms"] for d in direct)),
             "engine.gc_ms_per_op": gc_all / (len(solo) + len(loaded)),
         }
     return len(solo) + len(loaded), failed, warm_ok, e2e, layers
@@ -331,21 +388,25 @@ def run_ingest(args, cp, work):
     import calendar
     # the seed picks the month; a run spans hours, so it never crosses one
     start = calendar.timegm((2024, 1 + args.seed % 12, 1, 0, 0, 0))
+    kept_n = max(3, int(args.seconds // INGEST_S_PER_TRIGGER))
     deadline = time.time() + DEADLINE_S
     jvm = Jvm(cp, "ingest", work, {
         "cpus": args.cpus, "work": work, "store": f"{work}/store",
         "checkpoint": f"{work}/checkpoint", "txns": f"{work}/txns", "ticks": INGEST_TICKS,
-        "warm": INGEST_WARM, "min_kept": INGEST_MIN_KEPT, "start": start, "seconds": args.seconds, "trace": args.trace})
+        "warm": INGEST_WARM, "kept": kept_n, "start": start, "trace": args.trace})
     try:
         res = jvm.next("ingest", deadline)
         done = jvm.next("done", deadline)
     finally:
         jvm.close()
-    problems = checks.check_store(f"{work}/store", f"{work}/txns", res["ticks"])
-    for p in problems:
-        info("store_mismatch", problem=p)
     batches = res["batches"]
     kept = batches[INGEST_WARM:]
+    # failed: kept triggers whose candles are wrong; correct: no candle
+    # of a warm-up trigger is wrong
+    bad_batches = set()
+    for p in checks.check_store(f"{work}/store", f"{work}/txns", res["ticks"]):
+        info("store_mismatch", **p)
+        bad_batches.add(checks.trigger_of(p, start, INGEST_TICKS, len(batches)))
     trig = [b["trigger_ms"] for b in kept]
     info("ingest", warm_trigger_ms=[b["trigger_ms"] for b in batches[:INGEST_WARM]],
          kept_trigger_ms=trig, samples=len(kept), ticks_per_trigger=INGEST_TICKS,
@@ -360,7 +421,7 @@ def run_ingest(args, cp, work):
         add = [b["add_batch_ms"] for b in kept]
         written = [b["counters"].get("records_written", 0) for b in kept]
         changed = [changed_candles(start, INGEST_TICKS, b["batch"]) for b in kept]
-        counters = {}
+        counters = dict(res["kept_jvm"])
         for b in kept:
             for k, v in b["counters"].items():
                 counters[k] = counters.get(k, 0) + v
@@ -374,10 +435,10 @@ def run_ingest(args, cp, work):
             "store.write_amplification": sum(written) / sum(changed),
             "store.files_total": res["store_files"],
             "store.batch_growth": statistics.mean(add[-q:]) / statistics.mean(add[:q]),
-            **engine_layers(counters, len(kept), sum(trig) / 1000, args.cpus),
-            "engine.gc_ms_per_op": res["kept_gc_ms"] / len(kept),
+            **engine_layers(counters, len(kept), sum(trig) / 1000, args.cpus, 0.0),
         }
-    return len(kept), 0, not problems, e2e, layers
+    failed = len({b for b in bad_batches if b >= INGEST_WARM})
+    return len(kept), failed, not any(b < INGEST_WARM for b in bad_batches), e2e, layers
 
 
 WORKLOADS = {"serve": run_serve, "ingest": run_ingest}
@@ -396,7 +457,7 @@ def main():
     work = os.path.join(root, "runs", f"{args.workload}-{args.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
-    load_before = loadavg()
+    load_before, ticks_before = loadavg(), cpu_ticks()
     try:
         attempted, failed, correct, e2e, layers = WORKLOADS[args.workload](args, cp, work)
     except Exception:
@@ -405,7 +466,8 @@ def main():
             sys.stderr.write("".join(open(log).readlines()[-40:]))
         raise
     finally:
-        info("loadavg", before=load_before, after=loadavg())
+        steal, total = (a - b for a, b in zip(cpu_ticks(), ticks_before))
+        info("loadavg", before=load_before, after=loadavg(), cpu_steal_share=steal / max(1, total))
         shutil.rmtree(work, ignore_errors=True)
     results = os.path.join(root, "results")
     os.makedirs(results, exist_ok=True)

@@ -12,15 +12,16 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
+import graft.GenData
 import graft.model.CandleTimeFrame
 import graft.operators.{CandleStore, Candles}
 import graft.serving.CandleHttpServer
 import graft.streaming.{CandleStream, TransactionSimulator}
 
-/** Workload JVM of the benchmark. `perfbench/run.py` builds the inputs,
-  * starts this class with one workload and reads the JSON lines it
-  * prints. It drives graft only through its public entry points; the
-  * listeners below are registered only when `trace=1`.
+/** Workload JVM of the benchmark. `perfbench/run.py` starts this class
+  * with one workload and reads the JSON lines it prints. It drives
+  * graft only through its public entry points; the listeners below are
+  * registered only when `trace=1`.
   *
   * Usage: graftbench.Main <serve|ingest> key=value...
   */
@@ -107,9 +108,10 @@ object Main {
   def ms(t0: Long): Double = (System.nanoTime() - t0) / 1e6
 }
 
-/** Spark-listener counters for traced runs. Task metrics are summed
-  * globally and per streaming batch (the `streaming.sql.batchId` job
-  * property); codegen comes from Spark's CodegenMetrics histograms.
+/** Spark-listener counters for traced runs. Stage and task metrics
+  * are summed globally and per streaming batch (the
+  * `streaming.sql.batchId` job property); codegen compiles come from
+  * Spark's CodegenMetrics and compile time from CodeGenerator.
   */
 final class Tracer extends SparkListener {
   private val totals = mutable.Map.empty[String, Double].withDefaultValue(0.0)
@@ -134,6 +136,11 @@ final class Tracer extends SparkListener {
     addAll(batch, "jobs" -> 1.0)
   }
 
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    val batch = synchronized(stageBatch.get(e.stageInfo.stageId))
+    addAll(batch, "stages" -> 1.0)
+  }
+
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val m = e.taskMetrics
     if (m == null) return
@@ -148,12 +155,8 @@ final class Tracer extends SparkListener {
       "records_written" -> m.outputMetrics.recordsWritten.toDouble)
   }
 
-  /** Totals plus codegen compiles and JVM GC time, read now. */
-  def snapshot: Map[String, Double] =
-    synchronized(totals.toMap) ++ Map(
-      "codegen_compiles" ->
-        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount.toDouble,
-      "gc_ms" -> Main.gcMs.toDouble)
+  /** Totals plus the JVM-wide counters, read now. */
+  def snapshot: Map[String, Double] = synchronized(totals.toMap) ++ Tracer.jvmCounters
 
   def batch(b: Long): Map[String, Double] =
     synchronized(perBatch.get(b).map(_.toMap).getOrElse(Map.empty))
@@ -168,7 +171,15 @@ object Tracer {
 
   /** Wait until the asynchronous listener bus has delivered every event. */
   def drain(spark: SparkSession): Unit =
-    org.apache.spark.graftbench.ListenerBus.drain(spark.sparkContext)
+    org.apache.spark.graft.BusFlush.drain(spark.sparkContext, 60000L)
+
+  /** Counters no listener sees: codegen compiles and compile time, GC. */
+  def jvmCounters: Map[String, Double] = Map(
+    "codegen_compiles" ->
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount.toDouble,
+    "codegen_ms" ->
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6,
+    "gc_ms" -> Main.gcMs.toDouble)
 }
 
 /** Walks executed plans, including adaptive query stages. */
@@ -181,8 +192,9 @@ object Plans extends AdaptiveSparkPlanHelper {
   }
 }
 
-/** `serve`: build the store once, then let the Python client drive
-  * CandleHttpServer. Commands arrive on stdin, one per line:
+/** `serve`: generate the sf0.1 events with graft.GenData, build the
+  * store once, then let the Python client drive CandleHttpServer.
+  * Commands arrive on stdin, one per line:
   *   MARK <name>          — traced runs: snapshot the counters and reply
   *   DIRECT <file> <n>    — traced runs: call the routes' CandleStore
   *                          functions directly for the first n requests
@@ -191,9 +203,14 @@ object Plans extends AdaptiveSparkPlanHelper {
 object Serve {
   def run(spark: SparkSession, o: Map[String, String], tracer: Option[Tracer]): Unit = {
     val store = o("store")
-    CandleStore.write(Candles.multiTimeframe(Candles.transactions(spark, o("data"))), store)
+    val data = o("data")
+    val t0 = System.nanoTime()
+    GenData.writeSingle(GenData.events(spark, o("events").toLong), data, "events")
+    Main.emit("events", Map("path" -> s"$data/events.parquet", "gen_ms" -> Main.ms(t0)))
+    val t1 = System.nanoTime()
+    CandleStore.write(Candles.multiTimeframe(Candles.transactions(spark, data)), store)
     val server = CandleHttpServer.start(spark, store, 0)
-    Main.emit("ready", Map("port" -> server.getAddress.getPort))
+    Main.emit("ready", Map("port" -> server.getAddress.getPort, "store_build_ms" -> Main.ms(t1)))
     val in = new BufferedReader(new InputStreamReader(System.in))
     var line = in.readLine()
     try while (line != null && line != "STOP") {
@@ -286,41 +303,31 @@ object Serve {
   }
 }
 
-/** `ingest`: simulated ticks → minute candles → cascade store. After
-  * `warm` triggers, triggers run for `seconds` (at least `min_kept` of
-  * them); the tick stream is then cut at the end of a trigger (later
-  * triggers see no rows), so the store holds whole triggers only.
+/** `ingest`: simulated ticks → minute candles → cascade store, from
+  * an empty store. The tick stream ends after `warm` + `kept` triggers
+  * (later triggers see no rows), so every run does the same work and
+  * the store holds whole triggers only.
   */
 object Ingest {
-  /** Epoch second at which ticks stop (exclusive); read per row. */
-  private val cutSec = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
-
   def run(spark: SparkSession, o: Map[String, String], tracer: Option[Tracer]): Unit = {
     val ticks = o("ticks").toLong
     val warm = o("warm").toInt
+    val batches = warm + o("kept").toInt
     val start = o("start").toLong
     val store = o("store")
-    val beforeCut = udf((s: Long) => s < cutSec.get).asNondeterministic()
     val txns = TransactionSimulator.streamMicroBatch(spark, ticks, 1L, start)
-      .filter(beforeCut(unix_seconds(col("ts"))))
+      .filter(col("ts") < timestamp_seconds(lit(start + batches * ticks)))
     val minute = CandleStream.candles(txns, CandleTimeFrame.Minute)
     val q = CandleStream.cascadeToStore(minute, store, o("checkpoint"))
     def committed: Long = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
     def await(batch: Long): Unit =
       while (committed < batch && q.exception.isEmpty) Thread.sleep(2)
     await(warm - 1L)
-    val gc0 = Main.gcMs
-    val deadline = System.nanoTime() + (o("seconds").toDouble * 1e9).toLong
-    while (System.nanoTime() < deadline && q.exception.isEmpty) Thread.sleep(2)
-    // the trigger now running is the last one that gets ticks, unless
-    // fewer than `min_kept` triggers would then be kept
-    val last = math.max(committed + 1, warm + o("min_kept").toLong - 1)
-    cutSec.set(start + (last + 1) * ticks)
-    await(last)
-    val keptGcMs = Main.gcMs - gc0
+    val jvm0 = Tracer.jvmCounters
+    await(batches - 1L)
+    val jvm1 = Tracer.jvmCounters
     q.stop()
     q.exception.foreach(e => throw e)
-    val batches = (last + 1).toInt
     val progress = q.recentProgress.filter(_.batchId < batches).sortBy(_.batchId)
     require(progress.length == batches,
       s"expected $batches progress records, got ${progress.length}")
@@ -342,7 +349,8 @@ object Ingest {
     TransactionSimulator.batch(spark, ticks * batches, start)
       .write.mode("overwrite").parquet(o("txns"))
     Main.emit("ingest", Map("batches" -> perBatch, "store_files" -> files,
-      "ticks" -> ticks * batches, "kept_gc_ms" -> keptGcMs))
+      "ticks" -> ticks * batches,
+      "kept_jvm" -> jvm1.map { case (k, v) => k -> (v - jvm0(k)) }))
   }
 
   private def countFiles(f: File): Int =

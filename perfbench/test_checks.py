@@ -5,6 +5,7 @@ window missing.
 
 Usage: python3 perfbench/test_checks.py
 """
+import calendar
 import json
 import os
 import shutil
@@ -17,7 +18,22 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import checks  # noqa: E402
-import inputs  # noqa: E402
+
+
+def write_events(path, n=2000, seed=7):
+    """A small events table in graft's shape (symbol = event_type,
+    price = value, quantity = props.k) over two days, with strictly
+    increasing timestamps so that open and close have no ties."""
+    rng = np.random.default_rng(seed)
+    ts = pd.Timestamp("2024-01-01") + pd.to_timedelta(
+        np.sort(rng.choice(2 * 86400 * 10**6, n, replace=False)), unit="us")
+    pd.DataFrame({
+        "event_id": np.arange(n),
+        "ts": ts,
+        "event_type": rng.choice(["view", "click", "purchase", "signup", "error"], n),
+        "value": np.round(rng.exponential(50.0, n), 2),
+        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n)],
+    }).to_parquet(path)
 
 
 def spark_json(rows, cols):
@@ -35,7 +51,7 @@ class ServeCheck(unittest.TestCase):
     @classmethod
     def setUpClass(cls):
         cls.tmp = tempfile.mkdtemp()
-        inputs.make(7, cls.tmp, n_events=2000)
+        write_events(f"{cls.tmp}/events.parquet")
         cls.con = checks.connect()
         checks.expected_store(cls.con, f"{cls.tmp}/events.parquet")
         sym, ws = cls.con.execute(
@@ -113,6 +129,19 @@ class StoreCheck(unittest.TestCase):
     def test_missing_window_fails(self):
         df = self.candles.drop(self.candles.index[3])
         self.assertTrue(checks.check_store(self.write_store(df), f"{self.tmp}/txns", self.ticks))
+
+    def test_problems_name_their_trigger(self):
+        df = self.candles.copy()
+        minute = df.index[(df["timeframe"] == "MINUTE")
+                          & (df["window_start"] == pd.Timestamp("2024-03-01 00:30"))][0]
+        day = df.index[df["timeframe"] == "DAY"][0]
+        df.loc[minute, "high"] += 0.01
+        df.loc[day, "low"] -= 0.01
+        start = calendar.timegm((2024, 3, 1, 0, 0, 0))
+        problems = checks.check_store(self.write_store(df), f"{self.tmp}/txns", self.ticks)
+        self.assertEqual({checks.trigger_of(p, start, 3600, 2) for p in problems}, {0, 1})
+        self.assertEqual({(p["timeframe"], p["window_start"]) for p in problems},
+                         {("MINUTE", "2024-03-01 00:30:00"), ("DAY", "2024-03-01 00:00:00")})
 
 
 if __name__ == "__main__":
